@@ -600,7 +600,7 @@ def main() -> None:
     for n in ordered:
         entry_len = len(n) + len(json.dumps(all_secs[n])) + 7
         if used + entry_len > LINE_BUDGET:
-            break
+            continue  # a shorter name further down may still fit
         summary["queries"][n] = all_secs[n]
         used += entry_len
     print(json.dumps(summary))

@@ -523,7 +523,7 @@ class RecordedReplicationSource(CopyBothConsumer, ReplicationFrameSource):
 # BEGIN and the next BEGIN belongs to the earlier one. So xid assignment
 # is "latest BEGIN at wal_start <= mine": a driver-side collect of the
 # BEGIN frames (bounded by transaction count, the TxRegistry pattern —
-# pgoutput.py PersistentTxRegistry.advance_from) + a vectorized
+# pgoutput.py collect_wire_stats) + a vectorized
 # searchsorted over the broadcast begin positions. No global sort, no
 # single-partition window.
 # ---------------------------------------------------------------------------

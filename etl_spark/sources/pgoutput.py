@@ -634,14 +634,6 @@ def _rel_spec(p: dict) -> dict:
     }
 
 
-def relation_registry(frames: DataFrame, frame_col: str = "frame") -> dict[int, dict]:
-    """Collect RELATION frames driver-side (catalog-metadata-sized: one per
-    table per schema change) → {rel_id: {table, columns, key_cols}} —
-    the NEWEST spec per relation by stream position."""
-    versioned = relation_registry_versioned(frames, frame_col)
-    return {rid: specs[-1][1] for rid, specs in versioned.items()}
-
-
 def relation_registry_versioned(
     frames: DataFrame, frame_col: str = "frame", lsn_col: str = "wal_start"
 ) -> dict[int, list[tuple[int, dict]]]:
@@ -663,24 +655,6 @@ def relation_registry_versioned(
     return reg
 
 
-def type_registry(frames: DataFrame, frame_col: str = "frame") -> dict[int, str]:
-    """Collect TYPE ('Y') frames driver-side (catalog-metadata-sized: one
-    per custom type per connection) → ``{type_oid: "namespace.name"}``.
-
-    The reference surfaces these so custom-typed columns keep their type
-    identity while their VALUES stay text pass-through
-    (cell.rs:8-14 ``Cell::String``); see :data:`BUILTIN_TYPE_OIDS`.
-    """
-    rows = frames.filter(
-        F.substring(F.col(frame_col).cast("binary"), 1, 1) == F.lit(b"Y")
-    ).select(frame_col).collect()
-    reg: dict[int, str] = {}
-    for r in rows:
-        p = parse_frame(bytes(r[0]))
-        reg[p["type_oid"]] = f"{p['namespace']}.{p['name']}"
-    return reg
-
-
 #: raw frame-file schema: what a binary WAL shipper writes per frame
 FRAME_SCHEMA = "wal_start long, xid long, frame binary"
 
@@ -696,7 +670,7 @@ class PersistentRelationRegistry:
 
     Versioning makes the carried decode base LSN-exact, which makes the
     *advance order* insensitive to crashes: the pipeline defers
-    ``update_from`` to batch success, but Spark's commit log is written
+    :meth:`ingest` to batch success, but Spark's commit log is written
     only after foreachBatch RETURNS — a crash in that residual window
     replays a batch whose registry already advanced. With a newest-only
     base the replay's pre-DDL frames (RELATION learned in an earlier
@@ -732,14 +706,9 @@ class PersistentRelationRegistry:
         except FileNotFoundError:
             pass
 
-    def update_from(self, frames: DataFrame, frame_col: str = "frame") -> None:
-        self.ingest(relation_registry_versioned(frames, frame_col))
-
     def ingest(self, new: dict[int, list[tuple[int, dict]]]) -> None:
-        """Fold an already-collected versioned registry delta (the shape
-        :func:`relation_registry_versioned` / :func:`collect_wire_stats`
-        produce) — the non-Spark half of :meth:`update_from`, so a caller
-        that already paid one batch-stats job never pays a second scan."""
+        """Fold an already-collected versioned registry delta (the
+        ``relations`` of :func:`collect_wire_stats`) — no Spark job."""
         if not new:
             return
         for rid, specs in new.items():
@@ -785,13 +754,9 @@ class PersistentTypeRegistry:
         except FileNotFoundError:
             pass
 
-    def update_from(self, frames: DataFrame, frame_col: str = "frame") -> None:
-        self.ingest(type_registry(frames, frame_col))
-
     def ingest(self, new: dict[int, str]) -> None:
-        """Fold an already-collected ``{oid: "ns.name"}`` delta — the
-        non-Spark half of :meth:`update_from` (see
-        :meth:`PersistentRelationRegistry.ingest`)."""
+        """Fold an already-collected ``{oid: "ns.name"}`` delta (the
+        ``types`` of :func:`collect_wire_stats`) — no Spark job."""
         if new:
             self._reg.update(new)
             import os
@@ -821,7 +786,7 @@ class PersistentTxRegistry:
 
     Generations close the same residual replay window the relation
     registry's versioning closes: Spark writes the batch's commit log
-    only after foreachBatch RETURNS, so a crash after ``advance_from``
+    only after foreachBatch RETURNS, so a crash after :meth:`advance_parsed`
     replays a batch whose tx state already advanced. Against the
     advanced state, a replayed continuation batch would (a) shift its
     ``tx_ordinal`` by the already-folded count — the same events
@@ -832,7 +797,7 @@ class PersistentTxRegistry:
     batch's first frame — the exact state the first attempt decoded
     with. WAL positions are strictly increasing in delivery order, so
     TWO generations (current + previous) cover the one-uncommitted-batch
-    replay window; a replayed ``advance_from`` is idempotent — it
+    replay window; a replayed :meth:`advance_parsed` is idempotent — it
     re-folds from the same base and REPLACES the stale generation.
 
     Entry shape per generation: ``{xid: {"final_lsn": int,
@@ -885,82 +850,21 @@ class PersistentTxRegistry:
                 break
         return {k: dict(v) for k, v in base.items()}
 
-    def advance_from(
-        self,
-        frames: DataFrame,
-        frame_col: str = "frame",
-        lsn_col: str = "wal_start",
-        xid_col: str = "xid",
-        bounds: tuple[int | None, int | None] | None = None,
-    ) -> None:
-        """Fold one micro-batch of raw frames into a NEW generation.
-
-        BEGIN/COMMIT frames are catalog-sized (one each per transaction in
-        the batch) → collected and parsed driver-side, like
-        :func:`relation_registry`. Per-xid envelope-row counts and the
-        batch's wal bounds come from distributed aggregations whose
-        results are one row per transaction / one row total — never
-        proportional to frame volume. Idempotent under whole-batch
-        replay: generations at/after the batch's first frame are replaced
-        by the re-fold from the same pre-batch base.
-
-        ``bounds``: the batch's ``(min, max)`` wal_start, if the caller
-        already computed them (the pipeline computes them once per trigger
-        and shares them with :meth:`snapshot_for` — ADVICE r10: avoid a
-        second uncached scan of the raw micro-batch). Omitted → one agg
-        here.
-        """
-        first = F.substring(F.col(frame_col).cast("binary"), 1, 1)
-        if bounds is None:
-            b = frames.agg(
-                F.min(lsn_col).alias("mn"), F.max(lsn_col).alias("mx")
-            ).collect()[0]
-            bounds = (b["mn"], b["mx"])
-        if bounds[0] is None:
-            return  # empty batch: nothing to fold
-        # limit-fenced collect (VERDICT r11 #3): B/C frames are bounded by
-        # TRANSACTION count, and the fence caps what the driver
-        # materializes — a pathological window of millions of tiny
-        # transactions raises with remediation instead of ballooning
-        # driver memory (ceiling shared with live.assign_xids)
-        from etl_spark.sources.live import MAX_TX_PER_WINDOW, _check_tx_budget
-
-        fence = 2 * MAX_TX_PER_WINDOW + 1
-        bc = (
-            frames.filter(first.isin([b"B", b"C"]))
-            .select(xid_col, frame_col)
-            .limit(fence)
-            .collect()
-        )
-        if len(bc) >= fence:
-            _check_tx_budget(MAX_TX_PER_WINDOW + 1, MAX_TX_PER_WINDOW,
-                             "PersistentTxRegistry.advance_from")
-        # Envelope-row counts: every frame that emits an envelope row and
-        # participates in tx_ordinal numbering (DML + R/T/M; B/C/Y/O do not).
-        counts = {
-            r[0]: r[1]
-            for r in frames.filter(first.isin([b"I", b"U", b"D", b"R", b"T", b"M"]))
-            .groupBy(xid_col)
-            .count()
-            .collect()
-        }
-        self.advance_parsed(
-            [(int(r[0]), bytes(r[1])) for r in bc], counts, bounds
-        )
-
     def advance_parsed(
         self,
         bc: list[tuple[int, bytes]],
         counts: dict[int, int],
         bounds: tuple[int | None, int | None],
     ) -> None:
-        """Fold already-collected BEGIN/COMMIT frames + per-xid envelope
-        counts into a new generation — the non-Spark half of
-        :meth:`advance_from`, fed directly by
-        :func:`collect_wire_stats` so the pipeline's one batch-stats job
-        covers the advance too. ``bc`` order is immaterial: a xid sees at
-        most one BEGIN per batch (sets its entry) and COMMITs only mark
-        the xid for removal after counts fold."""
+        """Fold one micro-batch into a NEW generation: its BEGIN/COMMIT
+        frames, per-xid envelope-row counts and ``(min, max)`` wal_start
+        bounds, as :func:`collect_wire_stats` returns them (``bc``,
+        ``env_counts``, ``bounds``) — no Spark job here. Idempotent under
+        whole-batch replay: generations at/after the batch's first frame
+        are replaced by the re-fold from the same pre-batch base. ``bc``
+        order is immaterial: a xid sees at most one BEGIN per batch (sets
+        its entry) and COMMITs only mark the xid for removal after counts
+        fold."""
         if bounds[0] is None:
             return  # empty batch: nothing to fold
         mn, mx = int(bounds[0]), int(bounds[1])
@@ -1136,7 +1040,9 @@ def decode_frames(
 
     ``xid_spans``: optional ``(begin_coord, begin_wal, close_coord)``
     sorted int64 arrays from :func:`etl_spark.sources.live.
-    compute_tx_spans` (position mode). When given, ``frames`` needs no
+    compute_tx_spans` (position mode only: the decoder bisects each
+    frame's ``wal_start``, so delivery-mode spans, whose coordinates are
+    not WAL positions, raise ``ValueError``). When given, ``frames`` needs no
     ``xid`` column: each frame's xid is derived INSIDE this decoder's
     Python stage by the same vectorized searchsorted ``assign_xids``
     applies — which removes assign_xids' separate ArrowEvalPython pass
@@ -1146,7 +1052,7 @@ def decode_frames(
 
     Input: one row per frame with ``(wal_start, xid, frame)`` — the
     XLogData context every frame arrives wrapped in. Relation metadata is
-    resolved up front (:func:`relation_registry`) and BROADCAST via
+    resolved up front (:func:`relation_registry_versioned`) and BROADCAST via
     closure capture; each executor decodes its frames independently.
     Transactions assemble via xid: ``commit_lsn`` = the Begin frame's
     final_lsn (broadcast equi-join on xid), ``tx_ordinal`` = row_number
@@ -1202,6 +1108,15 @@ def decode_frames(
             _np.asarray(xid_spans[1], dtype=_np.int64),
             _np.asarray(xid_spans[2], dtype=_np.int64),
         )
+        # position mode bisects wal_start, so each span's coordinate IS
+        # its BEGIN's position; delivery-mode coordinates would assign
+        # wrong xids without any error
+        if not _np.array_equal(spans[0], spans[1]):
+            raise ValueError(
+                "decode_frames(xid_spans=...) needs position-mode spans "
+                "(compute_tx_spans without coord_col): begin_coord must "
+                "equal begin_wal"
+            )
 
     def run(batches: Iterator) -> Iterator:
         import struct as _struct

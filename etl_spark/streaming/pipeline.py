@@ -87,11 +87,8 @@ class Pipeline:
         tables: list[TableConfig],
         sink: Sink,
         work_dir: str,
-        async_flush: bool = False,
         source_fmt: str = "envelope",
         envelope_fmt: str = "parquet",
-        compact_batches: bool = False,
-        batch_budget_bytes: int | None = None,
         metrics_registry=None,
     ):
         #: "envelope" = structured GENERIC_ENVELOPE files (parquet/json/csv
@@ -101,10 +98,6 @@ class Pipeline:
         #: shipper, decoded per micro-batch through sources/pgoutput.py
         self.source_fmt = source_fmt
         self.envelope_fmt = envelope_fmt
-        #: last-image per-key batch compaction before sink writes (see
-        #: _compact); safe for the key-merge sinks this engine ships,
-        #: NOT for changelog-fidelity destinations
-        self.compact_batches = compact_batches
         self.spark = spark
         self.source_dir = source_dir
         self.tables = {t.name: t for t in tables}
@@ -119,11 +112,6 @@ class Pipeline:
             }
             for t in tables
         }
-        if async_flush:
-            from etl_spark.streaming.async_flush import AsyncFlushSink
-
-            if not isinstance(sink, AsyncFlushSink):
-                sink = AsyncFlushSink(sink)
         self.sink = sink
         self.work_dir = work_dir
         # reference-parity telemetry (observability.rs inventory): the
@@ -134,17 +122,6 @@ class Pipeline:
         self.control = ControlStore(os.path.join(work_dir, "control"))
         self.schemas = SchemaRegistry(os.path.join(work_dir, "schemas"))
         self.checkpoint_dir = os.path.join(work_dir, "checkpoint")
-        #: T2 adaptive batch budget: durable bytes-per-file estimator that
-        #: re-sizes maxFilesPerTrigger at each start (see streaming/budget.py)
-        self.budget = None
-        self._files_in_trigger: int | None = None
-        if batch_budget_bytes is not None:
-            from etl_spark.streaming.budget import BatchBudget
-
-            self.budget = BatchBudget(
-                os.path.join(work_dir, "batch_budget.json"),
-                target_bytes=batch_budget_bytes,
-            )
         self.query = None
         self.relations = None
         self.txs = None
@@ -234,15 +211,11 @@ class Pipeline:
         (publication-membership sync, pipeline.rs:354-421). A later re-add
         re-copies from a fresh snapshot, exactly like the reference."""
         removed = [n for n in self.control.tables if n not in self.tables]
-        settle = getattr(self.sink, "await_pending", None)
         for name in removed:
+            # truncate BEFORE dropping the table from control: if the
+            # purge fails, the table stays tracked and the truncate
+            # retries on restart
             self.sink.truncate(name)
-            # settle the (possibly async-dispatched) truncate BEFORE
-            # dropping the table from control: if the purge fails, the
-            # table stays tracked and the truncate retries on restart —
-            # otherwise stale destination data would survive silently
-            if settle is not None:
-                settle()
             self.control.remove(name)
         return removed
 
@@ -362,38 +335,17 @@ class Pipeline:
         """foreachBatch body — the reference's apply loop for one
         micro-batch (SURVEY §3.2 steps 3-6).
 
-        With an :class:`~etl_spark.streaming.async_flush.AsyncFlushSink`
-        (T5): per-table writes dispatch without blocking — table k+1's
-        truncate probe / decode planning overlaps table k's write on the
-        flush thread — but every dispatched job settles BEFORE this
-        method returns. Spark's commit log marks the batch done at
-        return, so an unacked write here would be lost on restart (the
-        stream resumes after this batch); settling first keeps
-        at-least-once, and the flush-LSN advance below runs only after
-        the destination acknowledged every write (apply.rs ack-gated
-        restart LSN).
+        Every sink write completes before this method returns (T5):
+        Spark's commit log marks the batch done at return, so the
+        flush-LSN advance below runs only after the destination
+        acknowledged every write (apply.rs ack-gated restart LSN). The
+        one exception is a :class:`~etl_spark.streaming.
+        cross_batch_flush.CrossBatchFlushSink`, whose destination-acked
+        ledger replaces the commit log as the restart point.
         """
-        from etl_spark.streaming.async_flush import AsyncFlushSink
         from etl_spark.streaming.cross_batch_flush import CrossBatchFlushSink
 
-        if self.budget is not None:
-            # T2/A3: size-hint the RAW input batch (what the trigger cap
-            # controls) and feed the durable bytes-per-file estimator; the
-            # next start() applies the recommendation
-            from etl_spark.streaming.budget import estimate_batch_bytes
-
-            # the ACTUAL file count of the micro-batch, not the cap: the
-            # cap may not be in effect (first run: an uncapped availableNow
-            # drain delivers the whole backlog in one batch — seeding
-            # bytes_per_file at backlog-bytes/1 would clamp the next start
-            # to maxFilesPerTrigger=1), and a drain's last trigger carries
-            # fewer files than the cap
-            _rows, est, n_files = estimate_batch_bytes(batch, with_files=True)
-            n_files = n_files or (self._files_in_trigger or 0)
-            if n_files > 0:
-                self.budget.observe(est, n_files)
-
-        raw_frames = None
+        sc = self.spark.sparkContext
         wire = None
         if self.source_fmt == "pgoutput":
             # binary WAL frames → envelope: learn relations first (persisted
@@ -405,13 +357,12 @@ class Pipeline:
                 decode_frames,
             )
 
-            raw_frames = batch
             # snapshot BEFORE learning this batch's relations: the decoder
             # takes the PRE-batch base and resolves this batch's RELATION
             # frames per-position itself — handing it the post-update
             # snapshot would decode pre-DDL frames against post-DDL specs
             # The registry ADVANCE is deferred to batch success (below,
-            # with txs.advance_from): persisting the newest-only spec
+            # with txs.advance_parsed): persisting the newest-only spec
             # before the batch is applied would reopen the same hazard in
             # the at-least-once replay window — a crash mid-apply replays
             # the batch, and its pre-DDL frames (whose RELATION was
@@ -427,22 +378,23 @@ class Pipeline:
             # hoisted; each registry still ADVANCES at its original point
             # (types now, relations/txs deferred to batch success below),
             # so the crash/replay windows are unchanged.
-            self.spark.sparkContext.setJobDescription("pipeline: wire-stats")
-            wire = collect_wire_stats(batch, max_tx=MAX_TX_PER_WINDOW)
-            self.spark.sparkContext.setJobDescription(None)
+            sc.setJobDescription("pipeline: wire-stats")
+            try:
+                wire = collect_wire_stats(batch, max_tx=MAX_TX_PER_WINDOW)
+            finally:
+                sc.setJobDescription(None)
             # TYPE names are exempt from the deferral: they are idempotent
             # oid→name metadata (never positional), and _apply_relations
             # needs same-batch TYPE frames visible when naming custom-typed
             # columns mid-batch.
             self.types.ingest(wire.types)
             # LSN-exact tx carry (mirrors the versioned relation base): a
-            # crash after txs.advance_from but before Spark's commit log
+            # crash after txs.advance_parsed but before Spark's commit log
             # replays this batch against the ADVANCED tx state — shifted
             # continuation ordinals (dedup-defeating duplicate sequence
             # numbers) and popped committed xids (strict-decode crash
             # loop). snapshot_for(first frame's wal) returns the state the
             # FIRST attempt decoded with, whether or not the advance ran.
-            raw_wal_bounds = wire.bounds
             batch = decode_frames(
                 batch,
                 relations=carried_relations,
@@ -452,17 +404,8 @@ class Pipeline:
             )
         batch = with_sequence(batch) if "event_seq" not in batch.columns else batch
         batch = batch.persist()
-        async_mode = isinstance(self.sink, AsyncFlushSink)
         cross_mode = isinstance(self.sink, CrossBatchFlushSink)
         try:
-            if async_mode:
-                # defensive: all of the previous batch's jobs settled
-                # before its foreachBatch returned, and backfill's
-                # dispatches settle inside write_snapshot /
-                # reconcile_membership — so this is a no-op on every
-                # normal path; it only matters for stray dispatches made
-                # directly against the sink (tests, manual truncates)
-                self.sink.await_pending()
             # one agg also feeds telemetry (events + transactions per
             # batch ride the same job as the max-LSN read). Only ROW ops
             # count as events (RELATION/TYPE/MESSAGE metadata frames would
@@ -489,35 +432,35 @@ class Pipeline:
             # RELATION/MESSAGE rows are catalog-sized, so each group
             # collect_lists its own and _apply_relations consumes the
             # merged list instead of running its own filter+collect job.
-            self.spark.sparkContext.setJobDescription("pipeline: batch-stats")
-            tstats_agg = batch.groupBy("table").agg(
-                F.max("commit_lsn").alias("m"),
-                F.count(F.when(is_row, 1)).alias("n"),
-                F.count(
-                    F.when(
-                        F.col("commit_lsn").isNotNull()
-                        & (F.col("tx_ordinal") == 0),
-                        1,
-                    )
-                ).alias("ntx"),
-                F.max(
-                    F.when(F.col("op") == "TRUNCATE", F.col("event_seq"))
-                ).alias("trunc_seq"),
-                F.collect_list(
-                    F.when(
-                        F.col("op").isin("RELATION", "MESSAGE"),
-                        F.struct(
-                            "op", "table", "commit_lsn",
-                            "schema_snapshot_lsn", "after", "start_lsn",
-                        ),
-                    )
-                ).alias("relmeta"),
-            )
-            tstats = tstats_agg.collect()
-            self.spark.sparkContext.setJobDescription(None)
+            sc.setJobDescription("pipeline: batch-stats")
+            try:
+                tstats = batch.groupBy("table").agg(
+                    F.max("commit_lsn").alias("m"),
+                    F.count(F.when(is_row, 1)).alias("n"),
+                    F.count(
+                        F.when(
+                            F.col("commit_lsn").isNotNull()
+                            & (F.col("tx_ordinal") == 0),
+                            1,
+                        )
+                    ).alias("ntx"),
+                    F.max(
+                        F.when(F.col("op") == "TRUNCATE", F.col("event_seq"))
+                    ).alias("trunc_seq"),
+                    F.collect_list(
+                        F.when(
+                            F.col("op").isin("RELATION", "MESSAGE"),
+                            F.struct(
+                                "op", "table", "commit_lsn",
+                                "schema_snapshot_lsn", "after", "start_lsn",
+                            ),
+                        )
+                    ).alias("relmeta"),
+                ).collect()
+            finally:
+                sc.setJobDescription(None)
             self._apply_relations(
-                batch,
-                rows=[m for r in tstats for m in (r["relmeta"] or ())],
+                [m for r in tstats for m in (r["relmeta"] or ())]
             )
             # FORCE_SCHEMA_CLEANUP: aggressively prune schema versions up to
             # the durable flush LSN mid-stream (reference forces cleanup to
@@ -576,11 +519,6 @@ class Pipeline:
             # recorded flush LSN lags; replay from the stale LSN must
             # converge to the same state
             lost = failpoints.should_skip(failpoints.SEND_STATUS_UPDATE)
-            if async_mode:
-                # settle THIS batch's dispatched writes; a flush failure
-                # raises here, fails the micro-batch, and the restart
-                # replays it — the commit log never runs ahead of the ack
-                self.sink.await_pending()
             if cross_mode:
                 # do NOT settle: foreachBatch returns while the flush
                 # continues; the flush LSN advances on the destination ack
@@ -589,7 +527,6 @@ class Pipeline:
                 self.sink.end_batch(advance_lsn=not lost)
             elif max_lsn is not None and not lost:
                 # durable progress: every sink write above has completed
-                # (synchronously, or settled by await_pending just now)
                 self.control.advance_flush_lsn(int(max_lsn))
             self.metrics.inc(
                 telemetry.ETL_EVENTS_PROCESSED_TOTAL, int(max_lsn_row["n"]))
@@ -604,7 +541,7 @@ class Pipeline:
                     telemetry.ETL_APPLY_LOOP_FLUSH_LAG_BYTES,
                     max(0, int(max_lsn) - int(self.control.flush_lsn)),
                 )
-            if raw_frames is not None:
+            if wire is not None:
                 # tx- AND relation-registry advance is deliberately LAST:
                 # a batch that fails above replays on restart, and the
                 # replayed decode must see the same carried state it saw
@@ -631,15 +568,14 @@ class Pipeline:
         finally:
             batch.unpersist()
 
-    def _apply_relations(self, batch: DataFrame, rows=None) -> None:
+    def _apply_relations(self, rel: list) -> None:
         """Schema-change stream (T9, apply.rs:2138-2276 + Relation
         republish apply.rs:2363-2440): RELATION events carry the new column
         list as JSON; record each version keyed by its DDL start-LSN and
         switch the table's decode schema to the newest version.
 
-        ``rows``: the RELATION/MESSAGE rows if the caller already
-        collected them (the per-batch grouped agg collect_lists them —
-        catalog-sized — so no second filter+collect job runs here).
+        ``rel``: the batch's RELATION/MESSAGE rows, already collected by
+        the per-batch grouped agg (catalog-sized).
 
         Fidelity note vs the reference: pgoutput tuples are POSITIONAL, so
         the reference must decode each event against its exact schema
@@ -649,15 +585,6 @@ class Pipeline:
         per batch instead of a per-event split.
         """
         import json as _json
-
-        rel = rows if rows is not None else (
-            batch.filter(F.col("op").isin("RELATION", "MESSAGE"))
-            .select(
-                "op", "table", "commit_lsn", "schema_snapshot_lsn", "after",
-                "start_lsn",
-            )
-            .collect()
-        )
 
         # Versioning key = the RELATION's STREAM POSITION (start_lsn), not
         # its transaction's commit LSN: a relation change applies to the
@@ -831,16 +758,6 @@ class Pipeline:
             for name in d.columns_to_remove:
                 idents.pop(name, None)
         return idents
-
-    def _rename_aliases(self, table: str) -> dict[str, list[str]]:
-        """Current column name → its prior names (oldest first), the
-        flat view of :meth:`_column_identities` used by restart key
-        resolution."""
-        return {
-            cur: [n for _s, n in segs[:-1]]
-            for cur, segs in self._column_identities(table).items()
-            if len(segs) > 1
-        }
 
     def _ordinal_exprs(self, table: str, fields: list[tuple[str, str]]):
         """Field name → Column expr giving the field's ORDINAL in the
@@ -1028,24 +945,12 @@ class Pipeline:
         return out
 
     def _apply_table_batch(self, name: str, t_rows: DataFrame, batch_id: int,
-                           stats=None) -> None:
+                           stats) -> None:
         cfg = self.tables[name]
         # truncate splitting (T8): events ≤ the last TRUNCATE are dead;
         # the sink resets before the survivors apply. ``stats`` is this
         # table's row of the batch-wide grouped agg (_apply_batch) — the
-        # pre-computed truncate fence and ROW_OPS count; when absent
-        # (direct calls, e.g. tests) the same numbers come from one agg
-        # here. Either way the old truncate-agg + isEmpty job pair is one
-        # job at most.
-        if stats is None:
-            stats = t_rows.agg(
-                F.max(
-                    F.when(F.col("op") == "TRUNCATE", F.col("event_seq"))
-                ).alias("trunc_seq"),
-                F.count(
-                    F.when(F.col("op").isin(*ROW_OPS), 1)
-                ).alias("n"),
-            ).collect()[0]
+        # pre-computed truncate fence and ROW_OPS count.
         if stats["trunc_seq"] is not None:
             self.sink.truncate(name)
             t_rows = t_rows.filter(
@@ -1059,48 +964,14 @@ class Pipeline:
             if stats["n"] == 0:
                 return
             rows = t_rows.filter(F.col("op").isin(*ROW_OPS))
-        decoded = self._decode(cfg, rows)
-        if self.compact_batches:
-            decoded = self._compact(cfg, decoded)
-        self.sink.write_changes(name, decoded, batch_id)
-
-    def _compact(self, cfg: TableConfig, decoded: DataFrame) -> DataFrame:
-        """Last-image batch compaction: ONE event per key per micro-batch
-        (the highest ``event_seq``), DELETEs kept as tombstones.
-
-        Every sink in this engine merges by key with LWW-by-sequence, so
-        dropping a key's superseded intra-batch events cannot change the
-        destination state — it only cuts write amplification (the
-        reference's batch accumulation achieves the same reduction by
-        merging in memory before the destination write). This is
-        deliberately WEAKER than full net-effect cancellation
-        (:func:`etl_spark.workload.cdc_changelog_compact` drops
-        INSERT..DELETE pairs entirely): cancellation is only safe when
-        INSERT provably means "key did not exist before this batch",
-        which an at-least-once replayed stream cannot promise. Not for
-        changelog-fidelity destinations — those need every event.
-        """
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*cfg.keys).orderBy(F.col("event_seq").desc())
-        return (
-            decoded.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        self.sink.write_changes(name, self._decode(cfg, rows), batch_id)
 
     # ------------------------------------------------------------------
     def start(self, available_now: bool = True, max_files_per_trigger: int | None = None):
         """Backfill, then start the stream. ``available_now=True`` drains
         what exists and stops (test/batch mode); False runs continuously.
-        ``max_files_per_trigger`` bounds each micro-batch (T1); with a
-        ``batch_budget_bytes`` configured and no explicit cap, the cap
-        comes from the durable budget's recommendation (T2)."""
+        ``max_files_per_trigger`` bounds each micro-batch (T1)."""
         from etl_spark.streaming.cross_batch_flush import CrossBatchFlushSink
-
-        if max_files_per_trigger is None and self.budget is not None:
-            max_files_per_trigger = self.budget.recommend()
-        self._files_in_trigger = max_files_per_trigger
 
         if isinstance(self.sink, CrossBatchFlushSink):
             # ack-gated restart (apply.rs:1956-2023): wire the flush LSN to

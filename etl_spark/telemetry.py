@@ -84,7 +84,7 @@ def _fmt_value(v: float) -> str:
 class MetricsRegistry:
     """Counters, gauges and histograms with label sets + global labels.
 
-    Thread-safe (the async/cross-batch flush sinks dispatch from worker
+    Thread-safe (the cross-batch flush sink dispatches from worker
     threads). ``render()`` emits the Prometheus text exposition format:
     ``# TYPE`` headers, one ``name{labels} value`` sample per series,
     ``_bucket``/``_sum``/``_count`` for histograms.

@@ -633,6 +633,29 @@ def test_assign_xids_delivery_mode_concurrent_positions(spark):
     assert [x for w, x, _ in got if w == 110] == [100]
 
 
+def test_decode_frames_rejects_delivery_mode_spans(spark):
+    """decode_frames(xid_spans=...) bisects wal_start, so only
+    position-mode spans are valid; delivery-mode spans (coordinates are
+    delivery ordinals, not WAL positions) raise instead of silently
+    assigning wrong xids."""
+    rel = pgo.encode_relation(1, "public", "users", "d",
+                              [(1, "pk", 20, -1), (0, "val", 25, -1)])
+    frames = spark.createDataFrame([
+        (0, 5, bytearray(rel)),
+        (1, 10, bytearray(pgo.encode_begin(final_lsn=19, xid=1))),
+        (2, 11, bytearray(pgo.encode_insert(1, ["1", "a"]))),
+        (3, 19, bytearray(pgo.encode_commit(19, 20))),
+    ], "ord long, wal_start long, frame binary")
+    delivery = live.compute_tx_spans(frames, coord_col="ord")
+    with pytest.raises(ValueError, match="position-mode spans"):
+        pgo.decode_frames(frames.drop("ord"), xid_spans=delivery)
+    env = pgo.decode_frames(frames.drop("ord"),
+                            xid_spans=live.compute_tx_spans(frames))
+    got = [(r.op, r.commit_lsn, r.after)
+           for r in env.filter("op = 'INSERT'").collect()]
+    assert got == [("INSERT", 19, '{"pk": "1", "val": "a"}')]
+
+
 def test_assign_xids_tx_window_ceiling(spark):
     stream = _recorded_two_tx_stream()
     chunks = spark.createDataFrame([(bytearray(stream),)], "chunk binary")
@@ -643,17 +666,20 @@ def test_assign_xids_tx_window_ceiling(spark):
     assert live.assign_xids(frames, max_tx_per_window=2).count() == 8
 
 
-def test_tx_registry_fold_window_ceiling(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(live, "MAX_TX_PER_WINDOW", 1)
+def test_tx_registry_fold_window_ceiling(spark):
+    """The tx-registry fold's one collect (collect_wire_stats) keeps the
+    loud driver-collect ceiling: more transactions than ``max_tx`` in
+    one window raise instead of ballooning driver memory."""
     rows = []
     for t in range(3):
         base = 100 * (t + 1)
         rows.append((base, base, bytearray(pgo.encode_begin(final_lsn=base + 9, xid=t))))
         rows.append((base + 9, base, bytearray(pgo.encode_commit(base + 9, base + 10))))
     frames = spark.createDataFrame(rows, pgo.FRAME_SCHEMA)
-    reg = pgo.PersistentTxRegistry(str(tmp_path / "txs.json"))
     with pytest.raises(RuntimeError, match="driver-collect budget"):
-        reg.advance_from(frames)
+        pgo.collect_wire_stats(frames, max_tx=1)
+    # at/under budget: fine
+    assert len(pgo.collect_wire_stats(frames, max_tx=3).bc) == 6
 
 
 def test_run_live_proactive_keepalive_deadline():

@@ -71,6 +71,13 @@ def _frames_df(spark, rows):
     )
 
 
+def _advance(reg, frames):
+    """Fold one raw-frame batch into a tx registry the way the pipeline
+    does: one wire-stats collect, then the driver-side fold."""
+    wire = pgo.collect_wire_stats(frames)
+    reg.advance_parsed(wire.bc, wire.env_counts, wire.bounds)
+
+
 def test_decode_frames_end_to_end(spark):
     rel = pgo.encode_relation(1, "public", "users", "d",
                               [(1, "pk", 20, -1), (0, "val", 25, -1)])
@@ -181,10 +188,10 @@ def test_pipeline_pgoutput_source_end_to_end(spark, tmp_path):
 def test_decode_registry(spark):
     rel = pgo.encode_relation(7, "s", "t", "f", [(1, "a", 20, -1), (1, "b", 25, -1)])
     frames = _frames_df(spark, [(-1, -1, rel)])
-    reg = pgo.relation_registry(frames)
-    assert reg == {7: {"table": "s.t", "columns": ["a", "b"],
-                       "key_cols": ["a", "b"], "type_oids": [20, 25],
-                       "key_oids": [20, 25], "replident": "f"}}
+    reg = pgo.collect_wire_stats(frames).relations
+    assert reg == {7: [(-1, {"table": "s.t", "columns": ["a", "b"],
+                             "key_cols": ["a", "b"], "type_oids": [20, 25],
+                             "key_oids": [20, 25], "replident": "f"})]}
 
 
 def test_frame_roundtrip_message():
@@ -269,7 +276,7 @@ def test_cross_batch_transaction_carries_begin_state(spark, tmp_path):
     got1 = {r.start_lsn: (r.commit_lsn, r.tx_ordinal)
             for r in env1.filter("op = 'INSERT'").collect()}
     assert got1 == {11: (500, 0), 12: (500, 1)}
-    reg.advance_from(batch1)
+    _advance(reg, batch1)
     assert reg.snapshot() == {5: {"final_lsn": 500, "ordinal_offset": 2}}
 
     # restart simulation: a fresh registry instance rehydrates from disk
@@ -287,7 +294,7 @@ def test_cross_batch_transaction_carries_begin_state(spark, tmp_path):
     got2 = {r.start_lsn: (r.commit_lsn, r.tx_ordinal)
             for r in env2.filter("op != 'RELATION'").collect()}
     assert got2 == {13: (500, 2), 14: (500, 3)}
-    reg2.advance_from(batch2)
+    _advance(reg2, batch2)
     assert reg2.snapshot() == {}  # COMMIT seen -> state dropped
 
 
@@ -488,15 +495,15 @@ def test_type_registry_collects_type_frames(spark):
         (10, 5, pgo.encode_type(88888, "public", "hstore")),
         (11, 5, pgo.encode_begin(final_lsn=100, xid=5)),
     ])
-    assert pgo.type_registry(frames) == {
+    assert pgo.collect_wire_stats(frames).types == {
         99999: "public.citext", 88888: "public.hstore"}
 
 
 def test_persistent_type_registry_survives_restart(spark, tmp_path):
     path = str(tmp_path / "types.json")
     reg = pgo.PersistentTypeRegistry(path)
-    reg.update_from(_frames_df(spark, [
-        (9, 5, pgo.encode_type(99999, "public", "citext"))]))
+    reg.ingest(pgo.collect_wire_stats(_frames_df(spark, [
+        (9, 5, pgo.encode_type(99999, "public", "citext"))])).types)
     # fresh instance (simulated restart) still knows the type
     reg2 = pgo.PersistentTypeRegistry(path)
     assert reg2.snapshot() == {99999: "public.citext"}
@@ -517,9 +524,10 @@ def test_persistent_relation_registry_migrates_legacy_snapshot(spark, tmp_path):
     reg = pgo.PersistentRelationRegistry(path)
     snap = reg.snapshot()
     assert snap[1][0][0] == 0 and snap[1][0][1]["columns"] == ["pk", "v"]
-    reg.update_from(_frames_df(spark, [
+    reg.ingest(pgo.collect_wire_stats(_frames_df(spark, [
         (77, -1, pgo.encode_relation(1, "public", "t", "d",
-                                     [(1, "pk", 20, -1), (0, "w", 25, -1)]))]))
+                                     [(1, "pk", 20, -1), (0, "w", 25, -1)]))])
+    ).relations)
     snap = pgo.PersistentRelationRegistry(path).snapshot()
     assert [w for w, _s in snap[1]] == [0, 77]
     assert snap[1][-1][1]["columns"] == ["pk", "w"]
@@ -530,10 +538,10 @@ def test_persistent_relation_registry_caps_versions(spark, tmp_path):
     path = str(tmp_path / "rels.json")
     reg = pgo.PersistentRelationRegistry(path, max_versions=3)
     for i in range(5):
-        reg.update_from(_frames_df(spark, [
+        reg.ingest(pgo.collect_wire_stats(_frames_df(spark, [
             (10 + i, -1, pgo.encode_relation(
                 1, "public", "t", "d",
-                [(1, "pk", 20, -1), (0, f"c{i}", 25, -1)]))]))
+                [(1, "pk", 20, -1), (0, f"c{i}", 25, -1)]))])).relations)
     snap = reg.snapshot()
     assert [w for w, _s in snap[1]] == [12, 13, 14]
 
@@ -866,7 +874,7 @@ def test_pgoutput_crash_after_registry_advance_replays_correctly(spark, tmp_path
     batch success still leaves a residual window — registry advanced,
     commit log not yet written. A crash there replays the batch against
     the ADVANCED registry. Same frames as the deferred-advance test, but
-    the failpoint fires AFTER ``relations.update_from``: the persisted
+    the failpoint fires AFTER ``relations.ingest``: the persisted
     registry holds v2 when the replay decodes the pre-DDL 3-cell tuple.
     The versioned base must bisect that tuple (wal 61) to v1 (wal 1),
     not the newest v2 — a newest-only base would key 'G1' under 'keep'."""
@@ -1160,7 +1168,7 @@ def test_pgoutput_random_ddl_crash_model(spark, tmp_path, seed):
 
 def test_pgoutput_crash_after_tx_advance_replays_correctly(spark, tmp_path):
     """Round-10 hardening (sibling of the relation-registry window): a
-    crash AFTER txs.advance_from but before Spark's commit log replays
+    crash AFTER txs.advance_parsed but before Spark's commit log replays
     the batch against the ADVANCED tx state. For a cross-batch
     transaction whose COMMIT was in the crashed batch, the advanced
     state has the xid POPPED — the strict no-begin-state decode would
@@ -1235,11 +1243,11 @@ def test_tx_registry_refolds_on_transport_replay(spark, tmp_path):
     b2 = _frames_df(spark, [
         (20, 5, pgo.encode_insert(1, ["2", "b"])),
     ])
-    reg.advance_from(b1)
-    reg.advance_from(b2)
+    _advance(reg, b1)
+    _advance(reg, b2)
     assert [g[0] for g in reg._gens] == [11, 20]
     # legit replay of the newest batch: idempotent re-fold
-    reg.advance_from(b2)
+    _advance(reg, b2)
     assert [g[0] for g in reg._gens] == [11, 20]
     assert reg.snapshot()[5]["ordinal_offset"] == 2
     # a fold undercutting BOTH generations = transport replay from the
@@ -1254,7 +1262,7 @@ def test_tx_registry_refolds_on_transport_replay(spark, tmp_path):
 
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        reg.advance_from(replay)
+        _advance(reg, replay)
     assert any("multi-generation WAL re-fold" in str(r.message) for r in rec)
     # state converged to the same fold the first delivery produced
     assert reg.snapshot()[5]["ordinal_offset"] == 1

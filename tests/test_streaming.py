@@ -816,137 +816,67 @@ def test_pipeline_over_csv_envelope_stream(spark, env, tmp_path):
     assert cur[5] == "c1" and 1 not in cur
 
 
-def test_compact_batches_same_state_fewer_writes(spark, env, tmp_path):
-    """Last-image batch compaction: final destination state identical to
-    the uncompacted run; the sink sees ONE row per (key, batch) instead
-    of every intra-batch event (write amplification cut)."""
-    rows = [
+def test_multi_event_batch_keeps_last_image(spark, env):
+    """One micro-batch with several events per key: the current-state
+    sink keeps each key's last image (highest event_seq) and applies an
+    INSERT..DELETE pair as a delete."""
+    write_events(spark, env["source"], [
         ev("INSERT", "users", 30, 0, after={"pk": 5, "val": "v0"}),
         ev("UPDATE", "users", 30, 1, after={"pk": 5, "val": "v1"}),
         ev("UPDATE", "users", 30, 2, after={"pk": 5, "val": "v2"}),
         ev("UPDATE", "users", 31, 0, after={"pk": 1, "val": "a9"}),
         ev("INSERT", "users", 32, 0, after={"pk": 6, "val": "t0"}),
         ev("DELETE", "users", 33, 0, before={"pk": 6}, before_kind="KEY"),
-    ]
-    write_events(spark, env["source"], rows, "b1")
-
-    seen = []
-    orig = env["sink"].write_changes
-
-    def counting_write(table, df, batch_id):
-        pdf = df.cache()
-        seen.append(pdf.count())
-        orig(table, pdf, batch_id)
-
-    env["sink"].write_changes = counting_write
-    cfg = TableConfig(name="users", snapshot_path=env["snap"], keys=["pk"],
-                      payload_schema=PAYLOAD)
-    p = Pipeline(spark, env["source"], [cfg], env["sink"], env["work"],
-                 compact_batches=True)
-    p.run_until_drained()
-    # one surviving row per touched key: pk5 (last image v2), pk1, pk6
-    # (DELETE tombstone kept — never cancelled against its INSERT)
-    assert sum(seen) == 3
+    ], "b1")
+    make_pipeline(spark, env).run_until_drained()
     assert current(env) == {1: "a9", 2: "b", 3: "c", 5: "v2"}
 
 
-def test_compact_batches_replay_idempotent(spark, env):
-    """Compaction composes with at-least-once replay: wipe the checkpoint,
-    rerun compacted — state unchanged (the tombstone re-applies)."""
+def test_multi_event_batch_replay_idempotent(spark, env):
+    """At-least-once replay of a batch with several events per key: wipe
+    the checkpoint, rerun — state unchanged (the delete re-applies)."""
     write_events(spark, env["source"], [
         ev("INSERT", "users", 40, 0, after={"pk": 7, "val": "q0"}),
         ev("UPDATE", "users", 40, 1, after={"pk": 7, "val": "q1"}),
         ev("DELETE", "users", 41, 0, before={"pk": 2}, before_kind="KEY"),
     ], "b1")
-    cfg = TableConfig(name="users", snapshot_path=env["snap"], keys=["pk"],
-                      payload_schema=PAYLOAD)
-    p = Pipeline(spark, env["source"], [cfg], env["sink"], env["work"],
-                 compact_batches=True)
+    p = make_pipeline(spark, env)
     p.run_until_drained()
     first = current(env)
     shutil.rmtree(p.checkpoint_dir)
-    p2 = Pipeline(spark, env["source"], [cfg], env["sink"], env["work"],
-                  compact_batches=True)
-    p2.run_until_drained()
+    make_pipeline(spark, env).run_until_drained()
     assert current(env) == first == {1: "a", 3: "c", 7: "q1"}
 
 
-def test_adaptive_batch_budget(spark, env, tmp_path):
-    """T2/A3: the durable batch budget observes the first run's
-    bytes-per-file and re-sizes maxFilesPerTrigger on the next start — a
-    tiny byte target forces one file per micro-batch."""
-    import json as _json
-    import os as _os
+def test_failed_stats_collect_resets_job_description(spark, env, tmp_path,
+                                                     monkeypatch):
+    """A raising wire-stats or batch-stats collect must not leave its job
+    description on every later job of the session."""
+    from pyspark.errors import AnalysisException
 
-    from etl_spark.streaming.budget import BatchBudget, estimate_batch_bytes
+    from etl_spark.sources import pgoutput as pgo
 
-    # size-hint sanity: fixed widths + measured string lengths
-    df = spark.createDataFrame([(1, "abcd")], "a long, s string")
-    rows, est = estimate_batch_bytes(df)
-    assert rows == 1 and est == 8 + 4
+    sc = spark.sparkContext
 
-    for i in range(3):
-        write_events(spark, env["source"], [
-            ev("INSERT", "users", 100 + i, 0, after={"pk": 50 + i, "val": "x"}),
-        ], f"bb{i}")
-    p = make_pipeline(spark, env, batch_budget_bytes=1)
-    p.run_until_drained()
-    state = _json.load(open(_os.path.join(env["work"], "batch_budget.json")))
-    assert state["observations"] >= 1 and state["bytes_per_file"] > 1
-    assert p.budget.recommend() == 1  # 1-byte target < any real file
+    def boom(*_a, **_k):
+        raise RuntimeError("wire stats failed")
 
-    # restart: recommendation applies → one file per trigger
-    write_events(spark, env["source"], [
-        ev("INSERT", "users", 200, 0, after={"pk": 60, "val": "y"}),
-        ], "bb3")
-    p2 = make_pipeline(spark, env, batch_budget_bytes=1)
-    p2.run_until_drained()
-    assert p2._files_in_trigger == 1
-    # a roomy budget recommends a larger cap from the same observations
-    roomy = BatchBudget(_os.path.join(env["work"], "batch_budget.json"),
-                        target_bytes=1 << 20)
-    assert roomy.recommend() > 1
+    monkeypatch.setattr(pgo, "collect_wire_stats", boom)
+    cfg = TableConfig(name="users", snapshot_path=env["snap"], keys=["pk"],
+                      payload_schema=PAYLOAD)
+    wire = Pipeline(spark, env["source"], [cfg], env["sink"],
+                    str(tmp_path / "wire_work"), source_fmt="pgoutput")
+    frames = spark.createDataFrame([], pgo.FRAME_SCHEMA)
+    with pytest.raises(RuntimeError, match="wire stats failed"):
+        wire._apply_batch(frames, 0)
+    assert sc.getLocalProperty("spark.job.description") is None
 
-
-def test_batch_budget_closed_loop_resizes_microbatches(spark, env):
-    """T2 end-to-end: an UNCAPPED first drain (whole backlog in one
-    micro-batch) seeds bytes-per-file at per-FILE bytes — derived from the
-    batch's actual inputFiles(), never files=1 — and the next start's
-    recommendation demonstrably re-sizes the ACTUAL micro-batches
-    (asserted via the sink's per-batch version bumps)."""
-    import json as _json
-    import os as _os
-
-    for i in range(3):
-        write_events(spark, env["source"], [
-            ev("INSERT", "users", 300 + i, 0, after={"pk": 70 + i, "val": "x"}),
-        ], f"cl{i}")
-    p = make_pipeline(spark, env, batch_budget_bytes=1 << 20)
-    assert p.budget.recommend() is None  # fresh: first run is uncapped
-    p.run_until_drained()
-    state = _json.load(open(_os.path.join(env["work"], "batch_budget.json")))
-    bpf = state["bytes_per_file"]
-    # the 3-file backlog drained in ONE batch: per-file estimate, not
-    # whole-backlog-per-file (the files=1 seeding bug would clamp the
-    # next start to maxFilesPerTrigger=1 for many batches)
-    from etl_spark.envelope import with_sequence
-    from etl_spark.streaming.budget import estimate_batch_bytes
-    _rows, est_full = estimate_batch_bytes(
-        with_sequence(spark.read.parquet(env["source"])))
-    assert bpf <= 0.5 * est_full  # ≈ backlog/3 per file, not backlog/1
-
-    for i in range(4):
-        write_events(spark, env["source"], [
-            ev("INSERT", "users", 400 + i, 0, after={"pk": 80 + i, "val": "y"}),
-        ], f"cl2_{i}")
-    v_before = env["sink"]._current_version("users")
-    p2 = make_pipeline(spark, env, batch_budget_bytes=int(2 * bpf))
-    p2.run_until_drained()
-    assert p2._files_in_trigger == 2  # recommendation applied at start
-    # 4 pending files at 2 files/trigger → exactly 2 micro-batches, each
-    # committing one sink version
-    assert env["sink"]._current_version("users") - v_before == 2
-    assert current(env)[83] == "y"
+    # no commit_lsn column: the batch-stats aggregation itself raises
+    bad = spark.createDataFrame([("users", "INSERT", 1)],
+                                "table string, op string, event_seq long")
+    with pytest.raises(AnalysisException, match="commit_lsn"):
+        make_pipeline(spark, env)._apply_batch(bad, 0)
+    assert sc.getLocalProperty("spark.job.description") is None
 
 
 def test_flush_ledger_batch_returns_snapshot(tmp_path):
